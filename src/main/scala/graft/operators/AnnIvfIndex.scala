@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.VectorFunctions.norm
 
 /** The PRODUCTION shape of the IVF search family (q33/q110/q130/q148):
@@ -138,25 +139,25 @@ object AnnIvfIndex {
     // embeddings + starting assignment, materialized OFF the table
     // (the rebuild below overwrites it — a lazy plan reading the same
     // table would race its own overwrite)
-    val base = s.table(table)
-      .select(col("vec_id"), col("cell"), col("embedding"))
-      .localCheckpoint()
+    val base = Materialize.once("AnnIvfIndex.retrainBase", s.table(table)
+      .select(col("vec_id"), col("cell"), col("embedding")))
     val vecs = base.select(col("vec_id"), col("embedding"))
     var assign = base.select(col("vec_id"), col("cell"))
-    var cent = s.table(centTable(table))
-      .select(col("cell"), col("dim"), col("cbarq"), col("cnormsq"))
-      .localCheckpoint()
+    var cent = Materialize.once("AnnIvfIndex.retrainCentroids",
+      s.table(centTable(table))
+        .select(col("cell"), col("dim"), col("cbarq"), col("cnormsq")))
     val moved = scala.collection.mutable.ArrayBuffer.empty[Long]
     var round = 0
     while (round < maxRounds && !moved.lastOption.exists(_ <= tolMoves)) {
-      val next = nearestCell(vecs, cent).localCheckpoint()
+      val next =
+        Materialize.once("AnnIvfIndex.retrainAssign", nearestCell(vecs, cent))
       moved += next
         .join(assign.withColumnRenamed("cell", "prev_cell"), "vec_id")
         .filter(col("cell") =!= col("prev_cell")).count()
       assign = next
-      cent = centroidsOf(vecs.join(assign, "vec_id"))
-        .select(col("cell"), col("dim"), col("cbarq"), col("cnormsq"))
-        .localCheckpoint()
+      cent = Materialize.once("AnnIvfIndex.retrainCentroids",
+        centroidsOf(vecs.join(assign, "vec_id"))
+          .select(col("cell"), col("dim"), col("cbarq"), col("cnormsq")))
       round += 1
     }
     build(vecs.join(assign, "vec_id")
@@ -280,10 +281,9 @@ object AnnIvfIndex {
     // latency-sensitive serving path never re-executes the probe
     // scoring subplan. collect() here is the probe plan itself, not
     // corpus data.
-    import scala.jdk.CollectionConverters._
-    val probeRows = probes.collect().toSeq
+    val (probesLocal, probeRows) = Materialize.localRows(
+      "AnnIvfIndex.probes", probes)
     val probedCells = probeRows.map(_.getLong(1)).distinct
-    val probesLocal = s.createDataFrame(probeRows.asJava, probes.schema)
     val qPayload = queries
       .select(col("q_id"), col("embedding").as("q_emb"),
         norm(col("embedding")).as("q_nrm"))

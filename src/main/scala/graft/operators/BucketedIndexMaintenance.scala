@@ -30,6 +30,28 @@ import org.apache.spark.sql.functions.col
   * ∝ index size, no joins — is what this operator pins. */
 object BucketedIndexMaintenance {
 
+  /** Pin bucketed scans ON for an eagerly-executed lookup stage:
+    * Spark's DisableUnnecessaryBucketedScan drops bucketed reading for
+    * a filter-only subplan (nothing downstream wants the
+    * partitioning), which silently forfeits the BUCKET PRUNING the
+    * index layouts exist for — an In-filter would fall back to opening
+    * every bucket file's footer. Scoped and restored, never leaked —
+    * but the toggle is SESSION-scoped (runtime SQLConf), so a query
+    * running CONCURRENTLY on the same SparkSession inside this window
+    * would see bucketed scans pinned on too (behavior, not results: the
+    * flag never changes answers). Serving fronts that multiplex one
+    * session across threads should issue lookups from a
+    * `spark.newSession()` clone, which snapshots its own conf. */
+  private[operators] def withBucketedScan[T](s: SparkSession)(f: => T): T = {
+    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "false")
+    try f finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+  }
+
   /** Rewrite `table` compacted: same bucket spec, one file per bucket.
     * Also compacts a companion table's worth of appended files for
     * indexes that keep one (callers pass each table separately). */

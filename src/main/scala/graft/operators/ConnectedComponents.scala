@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Distributed connected components by accelerated min-label
   * propagation — the step after LSH banding in a dedup pipeline
   * (cluster transitively-linked duplicates), usable over any symmetric
@@ -113,28 +115,44 @@ object ConnectedComponents {
     * distributed fixpoint below is the at-scale path. */
   def minLabel(edges: DataFrame): (DataFrame, Int) = {
     val s = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val cutoff = localEdgeCutoff(s)
-    if (cutoff > 0L && e.count() <= cutoff) {
-      val collected = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val labeled = unionFind(collected)
-      import scala.jdk.CollectionConverters._
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val rowsL = labeled.toSeq.map { case (n, l) =>
-        org.apache.spark.sql.Row(n, l)
-      }
-      return (s.createDataFrame(rowsL.asJava, schema), 0)
+    // the whole solve runs construction-time jobs — the cutoff count,
+    // the local collect, every fixpoint round — so all of it is tagged
+    Materialize.scope(s, "ConnectedComponents.minLabel") {
+      val e = Materialize.once("ConnectedComponents.edges",
+        edges.select(col("src"), col("dst")))
+      val cutoff = localEdgeCutoff(s)
+      if (cutoff > 0L && e.count() <= cutoff) (localLabels(e), 0)
+      else fixpoint(e)
     }
+  }
+
+  /** The driver solve of [[minLabel]]: collect the (≤ cutoff) edges,
+    * union-find them, re-enter the labels as a local relation. */
+  private def localLabels(e: DataFrame): DataFrame = {
+    val collected = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val labeled = unionFind(collected)
+    import scala.jdk.CollectionConverters._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("node",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("label",
+        org.apache.spark.sql.types.LongType, nullable = false)))
+    val rowsL = labeled.toSeq.map { case (n, l) =>
+      org.apache.spark.sql.Row(n, l)
+    }
+    e.sparkSession.createDataFrame(rowsL.asJava, schema)
+  }
+
+  /** The distributed solve of [[minLabel]]: accelerated min-label
+    * propagation to a fixpoint over the checkpointed edges `e`. */
+  private def fixpoint(e: DataFrame): (DataFrame, Int) = {
+    val s = e.sparkSession
     // Smart init = hop 1 for free: under identity labels the neighbor
     // minimum is min(dst) per src — one aggregation, no join/distinct.
-    var labels = e.select(col("src").as("node"), col("dst"))
-      .groupBy(col("node"))
-      .agg(least(col("node"), min(col("dst"))).as("label"))
-      .localCheckpoint()
+    var labels = Materialize.once("ConnectedComponents.labels",
+      e.select(col("src").as("node"), col("dst"))
+        .groupBy(col("node"))
+        .agg(least(col("node"), min(col("dst"))).as("label")))
     val changedAcc = s.sparkContext.longAccumulator("cc_label_improvements")
     val markImproved = udf { (newLabel: Long, oldLabel: Long) =>
       if (newLabel < oldLabel) changedAcc.add(1L)
@@ -161,10 +179,9 @@ object ConnectedComponents {
             .as("new_label"),
           col("old"))
       changedAcc.reset()
-      labels = jumped
+      labels = Materialize.once("ConnectedComponents.labels", jumped
         .select(col("node"),
-          markImproved(col("new_label"), col("old")).as("label"))
-        .localCheckpoint()
+          markImproved(col("new_label"), col("old")).as("label")))
       rounds += 1
       converged = changedAcc.value == 0L
     }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+import graft.operators.BucketedIndexMaintenance.withBucketedScan
 import graft.queries.RetrievalQueries
 
 /** The PRODUCTION shape of q188's fuzzy "did you mean" matching: the
@@ -161,28 +163,6 @@ object FuzzyVocabIndex {
           .as("rebucket_due"))
   }
 
-  /** Pin bucketed scans ON for an eagerly-executed lookup stage:
-    * Spark's DisableUnnecessaryBucketedScan drops bucketed reading for
-    * a filter-only subplan (nothing downstream wants the
-    * partitioning), which silently forfeits the BUCKET PRUNING the key
-    * layout exists for — the In-filter would fall back to opening
-    * every bucket file's footer. Scoped and restored, never leaked —
-    * but the toggle is SESSION-scoped (runtime SQLConf), so a query
-    * running CONCURRENTLY on the same SparkSession inside this window
-    * would see bucketed scans pinned on too (behavior, not results: the
-    * flag never changes answers). Serving fronts that multiplex one
-    * session across threads should issue lookups from a
-    * `spark.newSession()` clone, which snapshots its own conf. */
-  private def withBucketedScan[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** Fuzzy-match a probe batch (`q_doc`, `probe`) against the
     * dictionary — q188's frame (q_doc, probe, n_matches, best_word,
     * best_df, best_dist), row-for-row identical on q188's workload at
@@ -206,7 +186,6 @@ object FuzzyVocabIndex {
     * (q188's one-probe-per-doc workload is the special case). */
   def search(probes: DataFrame, table: String, maxDist: Int = 1,
       maxInList: Int = 4096): DataFrame = {
-    import scala.jdk.CollectionConverters._
     require(maxDist >= 1 && maxDist <= 2,
       s"maxDist must be 1 or 2, got $maxDist")
     val s = probes.sparkSession
@@ -214,8 +193,8 @@ object FuzzyVocabIndex {
       else RetrievalQueries.delKeysExpr("probe")
     val pkPlan = probes.select(col("q_doc"), col("probe"),
       explode(expr(keysExpr)).as("k"))
-    val pkRows = withBucketedScan(s)(pkPlan.collect()).toSeq
-    val pkLocal = s.createDataFrame(pkRows.asJava, pkPlan.schema)
+    val (pkLocal, pkRows) = withBucketedScan(s)(Materialize.localRows(
+      "FuzzyVocabIndex.probeKeys", pkPlan))
     val keyList = pkRows.map(_.getAs[String]("k")).distinct
     val matchedKeys =
       if (keyList.size <= maxInList)
@@ -225,8 +204,8 @@ object FuzzyVocabIndex {
           "left_semi")
     val candPlan = matchedKeys.join(broadcast(pkLocal), "k")
       .select(col("q_doc"), col("probe"), col("w")).distinct()
-    val candRows = withBucketedScan(s)(candPlan.collect()).toSeq
-    val candLocal = s.createDataFrame(candRows.asJava, candPlan.schema)
+    val (candLocal, candRows) = withBucketedScan(s)(Materialize.localRows(
+      "FuzzyVocabIndex.candidates", candPlan))
     val candWords = candRows.map(_.getAs[String]("w")).distinct
     val prunedVocab =
       if (candWords.size <= maxInList)

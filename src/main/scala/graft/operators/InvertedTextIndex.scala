@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+import graft.operators.BucketedIndexMaintenance.withBucketedScan
 import graft.queries.RetrievalQueries
 
 /** The PRODUCTION shape of q180's keyword search: the corpus postings
@@ -124,14 +126,15 @@ object InvertedTextIndex {
 
   def build(docs: DataFrame, table: String, buckets: Int = 0,
       positional: Boolean = false, forward: Boolean = false): Unit = {
-    import scala.jdk.CollectionConverters._
     val metaPlan = metaRow(docs)
       .withColumn("batch_id", lit(BaseBatchId))
     // ONE corpus tokenization pass serves both bucket sizing and the
     // meta write: the collected row is re-injected as a local relation
     // (re-evaluating metaRow would cost a second full scan — and two
     // independent evaluations of a possibly nondeterministic input)
-    val metaVal = metaPlan.collect().head
+    val (meta, metaRows) =
+      Materialize.localRows("InvertedTextIndex.meta", metaPlan, 1)
+    val metaVal = metaRows.head
     val nb =
       if (buckets > 0) buckets
       else bucketsFor(metaVal.getAs[Long]("sum_dl"))
@@ -139,8 +142,7 @@ object InvertedTextIndex {
       .withColumn("batch_id", lit(BaseBatchId))
       .write.bucketBy(nb, "wh").sortBy("wh")
       .mode("overwrite").saveAsTable(table)
-    docs.sparkSession.createDataFrame(Seq(metaVal).asJava, metaPlan.schema)
-      .write.mode("overwrite").saveAsTable(metaTable(table))
+    meta.write.mode("overwrite").saveAsTable(metaTable(table))
     if (positional)
       RetrievalQueries.positionRows(docs)
         .withColumn("batch_id", lit(BaseBatchId))
@@ -243,26 +245,6 @@ object InvertedTextIndex {
     else idx.join(broadcast(keyFrame.select(col(keyCol)).distinct()),
       Seq(keyCol), "left_semi")
 
-  /** Pin bucketed scans ON for an eagerly-executed serving stage:
-    * Spark's DisableUnnecessaryBucketedScan drops bucketed reading
-    * when no downstream operator wants the partitioning — which
-    * forfeits the BUCKET PRUNING these lookups exist for (notably the
-    * `_fwd` fetches, whose subplans are filter-only). Scoped and
-    * restored, never leaked — but SESSION-scoped (runtime SQLConf): a
-    * concurrent query on the same SparkSession sees bucketed scans
-    * pinned on during the window (behavior only — results never
-    * change). Multi-threaded serving fronts should run lookups on a
-    * `spark.newSession()` clone, which snapshots its own conf. */
-  private def withBucketedScan[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** Top-k keyword search against the prebuilt index. `queries` must
     * have `q_doc` and `text`; output is q180's frame (q_doc, rk,
     * doc_id, n_hit, score) — rank-for-rank identical when `queries`
@@ -292,15 +274,14 @@ object InvertedTextIndex {
   private def searchPlan(queries: DataFrame, table: String,
       termsPerQuery: Int, k: Int, maxInList: Int)
       : (DataFrame, DataFrame, DataFrame => DataFrame) = {
-    import scala.jdk.CollectionConverters._
     val s = queries.sparkSession
     RetrievalQueries.registerKernels(s)
     val qtokPlan = queries
       .select(col("q_doc"),
         explode(expr(RetrievalQueries.whArrayExpr)).as("wh"))
       .distinct()
-    val qtokRows = qtokPlan.collect().toSeq
-    val qtok = s.createDataFrame(qtokRows.asJava, qtokPlan.schema)
+    val (qtok, qtokRows) = Materialize.localRows(
+      "InvertedTextIndex.queryTokens", qtokPlan)
     val whList = qtokRows.map(_.getAs[Long]("wh")).distinct
     def pruned(idx: DataFrame): DataFrame =
       pruneByWh(idx, whList, qtok, maxInList)
@@ -373,7 +354,6 @@ object InvertedTextIndex {
     * one combine shuffles on (q_doc, doc_id, base). */
   def phraseSearch(phrases: DataFrame, table: String,
       maxInList: Int = MaxInList): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val s = phrases.sparkSession
     RetrievalQueries.registerKernels(s)
     // the phrase tokenization collects once (workload-bounded, like
@@ -382,8 +362,8 @@ object InvertedTextIndex {
     val ptermsPlan = phrases.select(col("q_doc"),
         posexplode(expr(RetrievalQueries.whArrayExprFor("phrase")))
           .as(Seq("off", "wh")))
-    val ptermRows = ptermsPlan.collect().toSeq
-    val pterms = s.createDataFrame(ptermRows.asJava, ptermsPlan.schema)
+    val (pterms, ptermRows) = Materialize.localRows(
+      "InvertedTextIndex.phraseTerms", ptermsPlan)
     val whList = ptermRows.map(_.getAs[Long]("wh")).distinct
     val plen = pterms.groupBy(col("q_doc"))
       .agg(countDistinct(col("off")).as("plen"))
@@ -423,7 +403,6 @@ object InvertedTextIndex {
       expTerms: Int = RetrievalQueries.ExpTermsPerQuery,
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
       k: Int = 5, maxInList: Int = MaxInList): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val s = queries.sparkSession
     // collect the selected terms FIRST and build the first-stage
     // ranking from the LOCAL rows — using searchPlan's own ranked
@@ -431,16 +410,16 @@ object InvertedTextIndex {
     // second time when the pseudo-relevant hits are collected below
     val (_, terms, pruned) =
       searchPlan(queries, table, termsPerQuery, prfDocs, maxInList)
-    val termRows = withBucketedScan(s)(terms.collect()).toSeq
-    val termsLocal = s.createDataFrame(termRows.asJava, terms.schema)
+    val (termsLocal, termRows) = withBucketedScan(s)(Materialize.localRows(
+      "InvertedTextIndex.prfTerms", terms))
     val prRanked = RetrievalQueries.rankTop(
       RetrievalQueries.scoreCandidates(
         pruned(s.table(table)).join(broadcast(termsLocal), "wh")
           .crossJoin(broadcast(stats(s, table)))),
       "rk", prfDocs)
     val prPlan = prRanked.select(col("q_doc"), col("doc_id"))
-    val prRows = withBucketedScan(s)(prPlan.collect()).toSeq
-    val prLocal = s.createDataFrame(prRows.asJava, prPlan.schema)
+    val (prLocal, prRows) = withBucketedScan(s)(Materialize.localRows(
+      "InvertedTextIndex.prfHits", prPlan))
     val prIds = prRows.map(_.getAs[Long]("doc_id")).distinct
     // harvest: expansion candidates with their pseudo-relevant support
     val fwdPruned = pruneByKey(s.table(fwdTable(table)), "doc_id", prIds,
@@ -452,8 +431,8 @@ object InvertedTextIndex {
       .agg(count(lit(1)).as("nd"))
       .join(termsLocal.select(col("q_doc"), col("wh")), Seq("q_doc", "wh"),
         "left_anti")
-    val candRows = withBucketedScan(s)(expCand.collect()).toSeq
-    val candLocal = s.createDataFrame(candRows.asJava, expCand.schema)
+    val (candLocal, candRows) = withBucketedScan(s)(Materialize.localRows(
+      "InvertedTextIndex.prfCandidates", expCand))
     val candWhs = candRows.map(_.getAs[Long]("wh")).distinct
     // candidate df over the pruned postings scan = the TRUE corpus df
     // (all of a term's postings survive the wh filter)
@@ -465,8 +444,8 @@ object InvertedTextIndex {
       .withColumn("ern", row_number().over(ew))
       .filter(col("ern") <= expTerms)
       .select(col("q_doc"), col("wh"), col("df"))
-    val expRows = withBucketedScan(s)(exps.collect()).toSeq
-    val expsLocal = s.createDataFrame(expRows.asJava, exps.schema)
+    val (expsLocal, expRows) = withBucketedScan(s)(Materialize.localRows(
+      "InvertedTextIndex.prfExpansions", exps))
     // re-score with the widened term set — q185's second round
     val allTerms = termsLocal.unionByName(expsLocal)
     val allWhs =
@@ -499,7 +478,6 @@ object InvertedTextIndex {
       k: Int = RetrievalQueries.TopK,
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
       maxInList: Int = MaxInList): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val s = queries.sparkSession
     val (ranked, _, _) =
       searchPlan(queries, table, termsPerQuery, fuseDepth, maxInList)
@@ -509,8 +487,8 @@ object InvertedTextIndex {
       .withColumn("rel_bp",
         expr("score div greatest(1L, maxs div 10000L)"))
       .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp"))
-    val candRows = withBucketedScan(s)(candsPlan.collect()).toSeq
-    val candsLocal = s.createDataFrame(candRows.asJava, candsPlan.schema)
+    val (candsLocal, candRows) = withBucketedScan(s)(Materialize.localRows(
+      "InvertedTextIndex.mmrCandidates", candsPlan))
     val candIds = candRows.map(_.getAs[Long]("doc_id")).distinct
     val tsets = pruneByKey(s.table(fwdTable(table)), "doc_id", candIds,
         candsLocal, maxInList)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** MATERIALIZED perceptual-fingerprint snapshot index — the
   * [[DeltaDedupIndex]] treatment for the multimodal dedup family
   * (VERDICT r15 #2): round 15 shipped image/audio near-dup as one-shot
@@ -160,11 +162,12 @@ object PerceptualDedupIndex {
     // SAME execution (ADVICE r16 #3): build() guarantees that by
     // re-reading the written table, but an append cannot isolate its
     // own generation from the table afterwards — so the batch's rows
-    // are pinned with an eager localCheckpoint BEFORE either write. A
-    // retried non-deterministic upstream re-executing between the two
-    // writes can then never land a sidecar that disagrees with the
-    // rows. Batch-sized (blocks+1 rows per admitted fingerprint).
-    val rows = indexRows(lo, admittedSig).localCheckpoint()
+    // are pinned with an eager checkpoint (Materialize.once) BEFORE
+    // either write. A retried non-deterministic upstream re-executing
+    // between the two writes can then never land a sidecar that
+    // disagrees with the rows. Batch-sized (blocks+1 rows per admitted fingerprint).
+    val rows =
+      Materialize.once("PerceptualDedupIndex.append", indexRows(lo, admittedSig))
     rows.write.bucketBy(nb, "bkey").sortBy("bkey")
       .mode("append").saveAsTable(table)
     dfRows(rows).write.bucketBy(nb, "bkey").sortBy("bkey")

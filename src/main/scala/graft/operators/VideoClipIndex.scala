@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** MATERIALIZED video clip-match snapshot index (VERDICT r16 #5): the
   * [[PerceptualDedupIndex]] treatment for q214's inverted frame-hash
   * relation. Round 16's clip matching re-derived and re-banded the
@@ -94,15 +96,15 @@ object VideoClipIndex {
 
   /** Advance the snapshot WITHOUT a rebuild: append `admittedFrames`'
     * rows and a new sidecar df generation in the existing bucket
-    * layout. The rows are pinned with an eager localCheckpoint before
+    * layout. The rows are pinned with an eager [[graft.Materialize.once]] before
     * either write (the ADVICE r16 rule from [[PerceptualDedupIndex
     * .append]]): index rows and their sidecar generation must come
     * from the SAME execution. */
   def append(admittedFrames: DataFrame, table: String): Unit = {
     val s = admittedFrames.sparkSession
     val nb = bucketCountOf(s, table)
-    val rows = admittedFrames.select(col("fhash"), col("vid"), col("pos"))
-      .localCheckpoint()
+    val rows = Materialize.once("VideoClipIndex.append",
+      admittedFrames.select(col("fhash"), col("vid"), col("pos")))
     rows.write.bucketBy(nb, "fhash").sortBy("fhash")
       .mode("append").saveAsTable(table)
     dfRows(rows).write.bucketBy(nb, "fhash").sortBy("fhash")

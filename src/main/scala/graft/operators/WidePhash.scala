@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** PRODUCTION-WIDTH perceptual-hash banding — the layout the narrow
   * (63-bit / 16-bit-block) image pipeline's own header promised and
   * round 15's ScaleTrend proved necessary: with 16-bit blocks of a
@@ -133,18 +135,13 @@ object WidePhash {
       .drop("bidx", "bval")
   }
 
-  /** The signature relation materialized ONCE (localCheckpoint, the
-    * minLabel-edges pattern): [[pairs]]/[[clusterLabels]] reference
-    * `sig` through many join/aggregate subtrees whose exchanges never
-    * unify (measured: q207's uncheckpointed plan re-ran the
-    * scan + codec-UDF subtree 12×, zero reused exchanges), and the
-    * production analog IS a materialized fingerprint table
-    * ([[PerceptualDedupIndex]]) — 5 longs per doc, executor-local.
-    * Consequence: queries composing these run Spark jobs at
-    * CONSTRUCTION and join the NoEagerActionSpec/WinScanSpec exempt
-    * lists. */
-  private def materialized(sig: DataFrame): DataFrame =
-    sig.localCheckpoint()
+  // Both entry points below take `sig` through Materialize.once (the
+  // minLabel-edges pattern): [[pairs]]/[[clusterLabels]] reference it
+  // through many join/aggregate subtrees whose exchanges never unify
+  // (measured: q207's uncheckpointed plan re-ran the scan + codec-UDF
+  // subtree 12×, zero reused exchanges), and the production analog IS
+  // a materialized fingerprint table (PerceptualDedupIndex) — 5 longs
+  // per doc, executor-local.
 
   /** Member-level verified pairs of `sig` (`id`, `l0..l3`):
     * (id_a, id_b, hd) with id_a < id_b — identical-fingerprint pairs
@@ -154,7 +151,7 @@ object WidePhash {
     * group size; cluster construction ([[clusterLabels]]) never
     * expands those groups. */
   def pairs(sigIn: DataFrame, dfCap: Int = DfCap): DataFrame = {
-    val sig = materialized(sigIn)
+    val sig = Materialize.once("WidePhash.pairs", sigIn)
     val dh = distinctHashes(sig)
     val members = sig.join(
       dh.select(laneCols("l") :+ col("rep"): _*), (0 until Lanes).map(l => s"l$l"))
@@ -179,7 +176,7 @@ object WidePhash {
     * [[pairs]]'s graph's because stars connect within groups and a
     * member cross pair exists iff its representative pair does. */
   def clusterLabels(sigIn: DataFrame, dfCap: Int = DfCap): DataFrame = {
-    val sig = materialized(sigIn)
+    val sig = Materialize.once("WidePhash.clusterLabels", sigIn)
     val dh = distinctHashes(sig)
     val members = sig.join(
       dh.select(laneCols("l") :+ col("rep"): _*), (0 until Lanes).map(l => s"l$l"))

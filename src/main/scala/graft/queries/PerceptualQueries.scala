@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.WidePhash
 
 /** Perceptual MULTIMODAL dedup — images (q206-q208), audio
@@ -720,9 +720,8 @@ object PerceptualQueries {
     // materialized once (the WidePhash rule): q214/q215 reference the
     // frame relation through the df-cap filter and both join sides —
     // non-unifiable subtrees that re-ran the frame-hash UDF ~4x per
-    // query (r17 profile). 3 longs/frame, executor-local; the
-    // consumers join the NoEagerActionSpec/WinScanSpec exempt lists.
-    full.union(clip).localCheckpoint()
+    // query (r17 profile). 3 longs/frame, executor-local.
+    Materialize.once("PerceptualQueries.videoFrames", full.union(clip))
   }
 
   private val videoFramesSql =
@@ -917,7 +916,7 @@ object PerceptualQueries {
     // feeds the image relation, the rep lookups, and the verdict frame
     // through non-unifiable subtrees — without this the double
     // fingerprint UDF re-evaluates per reference
-    val pd = widthFrame(s, d).localCheckpoint()
+    val pd = Materialize.once("PerceptualQueries.q216Widths", widthFrame(s, d))
     val im = pd.select(explode(array(
         struct((col("doc_id") * 2).as("id"), col("lo0").as("l0"),
           col("lo1").as("l1"), col("lo2").as("l2"), col("lo3").as("l3")),

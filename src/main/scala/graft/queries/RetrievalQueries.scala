@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Retrieval layer over the documents/embeddings corpus (driver north
   * star; beyond the reference's own surface): inverted-index keyword
@@ -57,6 +57,13 @@ object RetrievalQueries {
   private[graft] val TopK = 5
   private[graft] val RrfK = 60
 
+  /** |queries|: the workload is one query doc per `source`, and the
+    * testdata has 20 sources at every scale. A data property, named
+    * once: every workload-bounded collect in this family is sized by
+    * it, so a corpus that grows its sources fails loudly at the
+    * collect instead of silently widening the driver-side frames. */
+  private[graft] val QueryDocs = 20
+
   // ---- shared Spark-side front (also the InvertedTextIndex kernel) --
 
   /** `col` → array of 60-bit md5 token hashes (same hash as
@@ -104,11 +111,10 @@ object RetrievalQueries {
     * consumer compiles. At 100 TB this materialization IS the
     * production design: [[graft.operators.InvertedTextIndex]] serves
     * from exactly this frame persisted bucketed by wh; the in-plan
-    * derivation exists so DuckDB can replay it. Consumers are
-    * exempt-listed in NoEagerActionSpec (construction runs the
-    * checkpoint's jobs). */
+    * derivation exists so DuckDB can replay it. Construction runs the
+    * checkpoint's jobs, tagged by `Materialize.once`. */
   private def postingsM(s: SparkSession, d: String): DataFrame =
-    postings(s, d).localCheckpoint()
+    Materialize.once("RetrievalQueries.postings", postings(s, d))
 
   /** (doc_id, pos, wh): POSITIONAL postings — every token occurrence
     * with its 0-based position. The phrase-search kernel (q183 derives
@@ -142,6 +148,13 @@ object RetrievalQueries {
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("doc_id").as("q_doc"))
   }
+
+  /** [[queryDocs]] collected once ([[QueryDocs]] rows) — for the
+    * queries that reference it from several legs, so the window chain
+    * over documents runs once, not per leg. */
+  private def localQueryDocs(s: SparkSession, d: String): DataFrame =
+    Materialize.local("RetrievalQueries.queryDocs", queryDocs(s, d),
+      QueryDocs)
 
   /** ≤[[TermsPerQuery]] rarest terms per query doc: (q_doc, wh, df),
     * ranked (df asc, wh asc). Rarest-first is both the relevance choice
@@ -274,7 +287,7 @@ object RetrievalQueries {
     // qdocs is ≤|sources| rows and referenced by both legs — collect
     // once (the q189/q190 serving-seam discipline) so the window chain
     // over documents runs once, not per leg
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val kw = rankTop(scored(s, d, postingsM(s, d), qdocs), "rk_kw", FuseDepth)
       .select(col("q_doc"), col("doc_id"), col("rk_kw"))
     val emb = Tables.embeddings(s, d)
@@ -402,7 +415,7 @@ object RetrievalQueries {
   private def q182(s: SparkSession, d: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(s)
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val terms = quoteTerms(s, d, post, qdocs)
 
     val kw = rankTop(
@@ -550,7 +563,8 @@ object RetrievalQueries {
     // referenced by both the phrase extraction and the candidate join —
     // materialized once per invocation (the postingsM rule; the
     // production path reads the InvertedTextIndex `_pos` companion)
-    val th2 = positionRows(Tables.documents(s, d)).localCheckpoint()
+    val th2 = Materialize.once("RetrievalQueries.positions",
+      positionRows(Tables.documents(s, d)))
     val phrase = th2
       .join(broadcast(queryDocs(s, d)), col("doc_id") === col("q_doc"))
       .filter(col("pos").between(2, 4)) // 0-based ⇔ 1-based positions 3-5
@@ -613,11 +627,13 @@ object RetrievalQueries {
   private def q184(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     // the ranked hits are ≤|queries|×TopK rows and referenced twice
     // (position probe + text fetch) — collected once, the q189 pattern
-    val ranked = localized(rankTop(scored(s, d, post, qdocs), "rk", TopK)
-      .select(col("q_doc"), col("rk"), col("doc_id")))
+    val ranked = Materialize.local("RetrievalQueries.q184Ranked",
+      rankTop(scored(s, d, post, qdocs), "rk", TopK)
+        .select(col("q_doc"), col("rk"), col("doc_id")),
+      QueryDocs * TopK)
     val firstHit = positionRows(docs)
       .join(broadcast(
         queryTerms(s, d, post, qdocs).select(col("q_doc"), col("wh"))),
@@ -688,13 +704,14 @@ object RetrievalQueries {
     * The corpus shuffles exactly as often as q180: never. */
   private def q185(s: SparkSession, d: String): DataFrame = {
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     // terms is ≤|queries|×TermsPerQuery rows and referenced twice (the
     // anti-join and the widened term set) — collected once; the first
     // scoring round it feeds (prdocs) is likewise ≤|queries|×PrfDocs
     // and feeds the expansion aggregation once
-    val terms = localized(queryTerms(s, d, post, qdocs))
-    val st = localized(stats(s, d))
+    val terms = Materialize.local("RetrievalQueries.q185Terms",
+      queryTerms(s, d, post, qdocs), QueryDocs * TermsPerQuery)
+    val st = Materialize.local("RetrievalQueries.stats", stats(s, d), 1)
     val prdocs = rankTop(scoreCandidates(
         post.join(broadcast(terms), "wh").crossJoin(broadcast(st))),
         "rk", PrfDocs)
@@ -794,13 +811,14 @@ object RetrievalQueries {
     // the guard is applied identically on both engines
     // ≤|queries|×FuseDepth rows, referenced twice (token-set broadcast
     // + the MMR fold input) — collected once, the q189 pattern
-    val cands = localized(
+    val cands = Materialize.local("RetrievalQueries.q186Candidates",
       rankTop(scored(s, d, postingsM(s, d), queryDocs(s, d)),
         "rk", FuseDepth)
       .withColumn("maxs", max(col("score")).over(mw))
       .withColumn("rel_bp",
         expr("score div greatest(1L, maxs div 10000L)"))
-      .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp")))
+      .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp")),
+      QueryDocs * FuseDepth)
     registerKernels(s)
     val tsets = Tables.documents(s, d)
       .join(broadcast(cands.select(col("doc_id")).distinct()), "doc_id")
@@ -1270,7 +1288,6 @@ object RetrievalQueries {
     * payloads; per-query feature math is workload-bounded. The corpus
     * scales only the one token shuffle. */
   private def q189(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     graft.expressions.FloatVectorDot.register(s)
     // retrieved ∪ known-positive: the target doc always joins the pool
     // (rk_kw = 0 marks "scored but not retrieved" — it shares its own
@@ -1288,10 +1305,9 @@ object RetrievalQueries {
     // + the feature join) — a Spark subtree referenced thrice executes
     // thrice, so the first-stage scoring pass runs ONCE and the
     // collected rows re-inject as a local relation (the serving-seam
-    // pattern; q189 and its dependants are exempt-listed in
-    // NoEagerActionSpec for exactly this)
-    val candRows = candsPlan.collect().toSeq
-    val cands = s.createDataFrame(candRows.asJava, candsPlan.schema)
+    // pattern, Materialize.local)
+    val cands = Materialize.local("RetrievalQueries.q189Pool", candsPlan,
+      QueryDocs * (FuseDepth + 1))
     registerKernels(s)
     val tsets = Tables.documents(s, d)
       .join(broadcast(cands.select(col("doc_id")).unionByName(
@@ -1426,28 +1442,23 @@ object RetrievalQueries {
     * the broadcast centroid table, the candidate join keys on the cell
     * — against the materialized index it is the pruned-bucket scan);
     * the fusion and recall bookkeeping are ≤3×|queries| rows. */
-  /** Collect a workload-bounded leg (≤|queries|·FuseDepth rows at any
-    * corpus size) and re-inject it as a local relation — q190 consumes
-    * each retrieval leg twice (fusion + its own recall row), and a
-    * subtree referenced twice executes twice (the round-14
-    * repeated-subtree sweep; exemption recorded in NoEagerActionSpec). */
-  private def localized(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
-
   private def q190(s: SparkSession, d: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(s)
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val terms = quoteTerms(s, d, post, qdocs)
 
-    // keyword leg — InvertedTextIndex.search's formula
-    val kw = localized(rankTop(
+    // keyword leg — InvertedTextIndex.search's formula. Each leg is
+    // collected once (≤|queries|·FuseDepth rows at any corpus size):
+    // q190 consumes each retrieval leg twice (fusion + its own recall
+    // row), and a subtree referenced twice executes twice (the
+    // round-14 repeated-subtree sweep)
+    val kw = Materialize.local("RetrievalQueries.q190Keyword", rankTop(
       scoreCandidates(post.join(broadcast(terms), "wh")
         .crossJoin(broadcast(stats(s, d)))),
       "rk_kw", FuseDepth)
-      .select(col("q_doc"), col("doc_id"), col("rk_kw")))
+      .select(col("q_doc"), col("doc_id"), col("rk_kw")),
+      QueryDocs * FuseDepth)
 
     // semantic leg — AnnIvfIndex.search's math over the label cells
     val emb = Tables.embeddings(s, d)
@@ -1476,13 +1487,14 @@ object RetrievalQueries {
     // collected once (≤|queries|·cells rows): BOTH probe budgets below
     // slice this frame, and the centroid pipeline above it must run
     // once, not once per budget
-    val probeRk = localized(qdots
+    val probeRk = Materialize.local("RetrievalQueries.q190Probes", qdots
       .join(broadcast(cmeta.withColumnRenamed("label", "c_label")),
         "c_label")
       .withColumn("score", col("dotnum").cast("double") /
         sqrt(greatest(col("cnormsq"), lit(1L)).cast("double")))
       .withColumn("pk", row_number().over(Window.partitionBy(col("q_doc"))
-        .orderBy(col("score").desc, col("c_label").asc))))
+        .orderBy(col("score").desc, col("c_label").asc))),
+      QueryDocs * VectorQueries.LabelCells)
     val qembs = emb.join(broadcast(qdocs), col("vec_id") === col("q_doc"))
       .select(col("q_doc"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
@@ -1504,7 +1516,8 @@ object RetrievalQueries {
         .filter(col("rk_sem") <= FuseDepth)
         .select(col("q_doc"), col("doc_id"), col("rk_sem"))
     }
-    val sem = localized(semAt(IvfNprobe))
+    val sem = Materialize.local("RetrievalQueries.q190Semantic",
+      semAt(IvfNprobe), QueryDocs * FuseDepth)
     val sem4 = semAt(2 * IvfNprobe)
 
     // hybrid — HybridRetrieval's RRF over the two production legs
@@ -1661,7 +1674,7 @@ object RetrievalQueries {
         Window.partitionBy(col("q_doc"))
           .orderBy(col("model_score").desc, col("doc_id").asc)))
     // ≤|sources| rows, referenced by both recall rows — collected once
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val first = qdocs.join(
         scored.filter(col("label") && col("rk_kw") > 0)
           .select(col("q_doc"), col("rk_kw").cast("long").as("self_rk")),
@@ -1756,7 +1769,6 @@ object RetrievalQueries {
     * aggregable, which is why it suits a 100 TB training table where
     * an iterative fit would pay a pass per epoch. */
   private def q193(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val fxPlan = q189(s, d)
       .select(col("q_doc"), col("doc_id"), col("label"), col("rk_kw"),
         expr("cast(round(cos_sim * 1000000.0) as bigint)").as("f1"),
@@ -1770,10 +1782,10 @@ object RetrievalQueries {
     // corpus size) and three consumers need it (train aggregate,
     // holdout scoring, holdout query list) — a Spark subtree referenced
     // three times executes three times, so collect once and re-inject
-    // as a local relation (the InvertedTextIndex serving-seam pattern;
-    // q193 is exempt-listed in NoEagerActionSpec for exactly this)
-    val fxRows = fxPlan.collect().toSeq
-    val fx = s.createDataFrame(fxRows.asJava, fxPlan.schema)
+    // as a local relation (the InvertedTextIndex serving-seam pattern,
+    // Materialize.local)
+    val fx = Materialize.local("RetrievalQueries.q193Features", fxPlan,
+      QueryDocs * (FuseDepth + 1))
     val nm = fx.filter(col("split") === "train").agg(
         (sum(col("f1") * col("f1")) + 1L).as("a11"),
         sum(col("f1") * col("f2")).as("a12"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Data-SELECTION operators — the model-based curation stage a
   * pretraining pipeline runs AFTER the rule/dedup funnel exists:
@@ -65,10 +65,10 @@ object SelectionQueries {
     * frame is DOC-level (one row per doc_id — never the token stream,
     * which stays a per-consumer derivation exactly because at 100 TB
     * only doc-level verdicts are materializable; that is also what
-    * [[graft.operators.SelectionModelIndex]] persists). Consumers are
-    * exempt-listed in NoEagerActionSpec. */
+    * [[graft.operators.SelectionModelIndex]] persists). Construction
+    * runs the checkpoint's jobs, tagged by `Materialize.once`. */
   private def labelsM(s: SparkSession, d: String): DataFrame =
-    labels(s, d).localCheckpoint()
+    Materialize.once("SelectionQueries.labels", labels(s, d))
 
   private val labelsSql =
     s"""qual AS ($q149Sql),

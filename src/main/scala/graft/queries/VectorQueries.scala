@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.VectorFunctions._
 
 /** Similarity search over the embedding column (driver north star):
@@ -421,10 +421,11 @@ object VectorQueries {
     // re-executed the two aggregation chains per reference (codes, the
     // ADC query table, Lloyd's dots — 16-32 AQE-materialized exchange
     // jobs per query at 300-500 ms of driver latency each); as local
-    // rows each reference is a trivial broadcast. NoEagerActionSpec
-    // exempts the family for exactly this documented collect.
-    val csL = localized(s, cs(dims))
-    val cmetaL = localized(s, cmeta(emb, csL))
+    // rows each reference is a trivial broadcast.
+    val csL = Materialize.local("VectorQueries.pqCodebook", cs(dims),
+      LabelCells * SigDim)
+    val cmetaL = Materialize.local("VectorQueries.pqCodewordMeta",
+      cmeta(emb, csL), LabelCells * PqSubspaces)
     val xstat = dims.groupBy(col("vec_id"), col("subsp"))
       .agg(sum(col("u") * col("u")).as("xsumsq"))
     val codes = dims
@@ -450,13 +451,6 @@ object VectorQueries {
       .agg(sum(col("csum") * col("csum")).as("csumsq"))
       .join(emb.groupBy(col("label")).agg(count(lit(1)).as("n")), "label")
       .withColumnRenamed("label", "c_label")
-
-  /** Collect a bounded frame once and re-enter it as a local relation
-    * (the q189/q190/q197 serving-seam discipline). */
-  private def localized(s: SparkSession, df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
 
   /** Shared oracle-SQL prefix for the PQ family (q126/q127/q130): the
     * DuckDB mirror of [[pq]]. One definition per engine — a change to
@@ -567,10 +561,10 @@ object VectorQueries {
     * ‖q_sub‖² + ‖c‖² − 2q·c (10¹²-scaled), plus the raw sub-dot for
     * full-vector probe ranking. Queries × k × m rows — always tiny. */
   private def pqQueryTable(p: Pq): DataFrame = {
-    val qstat = p.xstat.filter(col("vec_id") < 8)
+    val qstat = p.xstat.filter(col("vec_id") < PqQueries)
       .select(col("vec_id").as("q_id"), col("subsp"),
         col("xsumsq").as("qsumsq"))
-    val tbl = p.dims.filter(col("vec_id") < 8)
+    val tbl = p.dims.filter(col("vec_id") < PqQueries)
       .join(broadcast(p.cs.select(col("label").as("c_label"), col("dim"),
         col("csum"))), "dim")
       .groupBy(col("vec_id").as("q_id"), col("subsp"), col("c_label"))
@@ -583,7 +577,8 @@ object VectorQueries {
     // queries × k × m rows — workload-bounded at any corpus size;
     // collected once so q130's three references (probes, the cand
     // broadcast, the full-dot reuse) don't re-run the dim chain.
-    localized(p.dims.sparkSession, tbl)
+    Materialize.local("VectorQueries.pqQueryTable", tbl,
+      PqQueries * LabelCells * PqSubspaces)
   }
 
   /** Fixed-order pivot sum of the 4 per-subspace ADC parts + per-query
@@ -822,6 +817,15 @@ object VectorQueries {
   private val SigPlanes = 16
   private val SigDim = 64
   private[graft] val SigOcc = 64L
+
+  /** The quantizer artifacts' sizes, named once for the bounded
+    * collects of the PQ family and q190/q197: k = 10 label cells at
+    * every testdata scale (a data property), m = dims/16 PQ subspaces
+    * (`subsp = dim div 16`), and the PQ family's fixed query sample
+    * (`vec_id < 8`). Defined after [[SigDim]], which they read. */
+  private[graft] val LabelCells = 10
+  private val PqSubspaces = SigDim / 16
+  private val PqQueries = 8
   /** Deterministic ±1 hyperplane matrix (splitmix64 bit per (j,i)) —
     * canonical copy in [[graft.expressions.SignLshSig]] (the Spark side
     * evaluates it as the fused codegen expression; the oracle SQL
@@ -1760,11 +1764,10 @@ object VectorQueries {
     // textbook persist-the-points k-means shape (guide §5: reused AND
     // expensive to recompute; at 100 TB this is the cached dim table
     // every distributed Lloyd implementation holds between rounds).
-    val dims = emb
+    val dims = Materialize.once("VectorQueries.q197Dims", emb
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .withColumn("u", round(col("v").cast("double") * 1e6).cast("long"))
-      .select(col("vec_id"), col("dim"), col("u"))
-      .localCheckpoint()
+      .select(col("vec_id"), col("dim"), col("u")))
     val nlab = emb.agg((max(col("label")).cast("long") + 1L).as("k"))
     val atrue = emb.select(col("vec_id"),
       col("label").cast("long").as("cell"))
@@ -1795,12 +1798,15 @@ object VectorQueries {
       org.apache.spark.sql.types.StructField("cnormsq",
         org.apache.spark.sql.types.LongType)))
     def centOf(assign: DataFrame): DataFrame = {
-      val cb = dims.join(assign, "vec_id")
-        .groupBy(col("cell"), col("dim"))
-        .agg(sum(col("u")).as("csum"), count(lit(1)).as("n"))
-        .select(col("cell"), col("dim"),
-          expr("csum div n").as("cbarq"))
-        .collect().toSeq
+      // the rows alone are read; the relation localRows builds beside
+      // them is lazy and dropped, so this adds no job
+      val (_, cb) = Materialize.localRows("VectorQueries.q197Centroids",
+        dims.join(assign, "vec_id")
+          .groupBy(col("cell"), col("dim"))
+          .agg(sum(col("u")).as("csum"), count(lit(1)).as("n"))
+          .select(col("cell"), col("dim"),
+            expr("csum div n").as("cbarq")),
+        LabelCells * SigDim)
       val normsq = cb.groupBy(_.getLong(0)).map { case (c, rs) =>
         c -> rs.map { r => val b = r.getLong(2); b * b }.sum
       }
@@ -1831,13 +1837,16 @@ object VectorQueries {
     // re-ran the whole reassignment aggregation — materialized once:
     // one doc-level row per vector, the per-round membership a
     // distributed Lloyd persists anyway
-    val a1 = assignTo(dims, c0).localCheckpoint() // Lloyd round 1
+    val a1 = Materialize.once("VectorQueries.q197Assign",
+      assignTo(dims, c0)) // Lloyd round 1
     val c1 = centOf(a1)
-    val a2 = assignTo(dims, c1).localCheckpoint() // round 2 (expected: zero moves)
+    val a2 = Materialize.once("VectorQueries.q197Assign",
+      assignTo(dims, c1)) // round 2 (expected: zero moves)
     val c2 = centOf(a2)
 
     val withNrm = emb.withColumn("nrm", norm(col("embedding")))
-    val queries = withNrm.filter(col("vec_id") < 50)
+    val nRecallQ = 50 // |Q|: the fixed query sample
+    val queries = withNrm.filter(col("vec_id") < nRecallQ)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
     val cands = withNrm.select(col("vec_id").as("c_id"),
@@ -1860,18 +1869,17 @@ object VectorQueries {
     // brute force, the Lloyd chains). The naive three-branch union
     // referenced them ~6× and Spark executes each reference (measured
     // 28.7 s at sf0.1), so they are collected ONCE and re-enter as
-    // local relations — the q189/q190 serving-seam collect discipline
-    // (NoEagerActionSpec exemption documented there). The corpus-sized
-    // membership frames (a0/a2) stay plans.
-    import scala.jdk.CollectionConverters._
-    def localized(df: DataFrame): DataFrame =
-      s.createDataFrame(df.collect().toSeq.asJava, df.schema)
-    val gtL = localized(gt)
-    val gtRows = gtL.count()
-    val nQ = lit(gtL.select(col("q_id")).distinct().count())
+    // local relations — the q189/q190 serving-seam collect discipline.
+    // The corpus-sized membership frames (a0/a2) stay plans.
+    val (gtL, gtRowsL) =
+      Materialize.localRows("VectorQueries.q197GroundTruth", gt, 3 * nRecallQ)
+    val gtRows = gtRowsL.size
+    val nQ = lit(gtRowsL.map(_.getLong(0)).distinct.size.toLong)
       .as("n_queries")
-    def probesOf(cent: DataFrame): DataFrame = localized(
-      assignTo(qdims, cent).select(col("vec_id").as("q_id"), col("cell")))
+    def probesOf(cent: DataFrame): DataFrame = Materialize.local(
+      "VectorQueries.q197Probes",
+      assignTo(qdims, cent).select(col("vec_id").as("q_id"), col("cell")),
+      nRecallQ)
     // one recall row: nprobe=1 probes under `cent`, membership `assign`
     def recallOf(state: String, probes: DataFrame, assign: DataFrame,
         changed: DataFrame): DataFrame = {

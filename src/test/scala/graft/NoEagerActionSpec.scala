@@ -2,87 +2,49 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Guard against the q61 regression class: declaring a query must not
-  * launch Spark jobs. Scalar thresholds belong in the plan as
+  * launch hidden Spark jobs. Scalar thresholds belong in the plan as
   * `crossJoin(broadcast(agg))` (the q13/q108/q61 pattern, whose 1-row
   * build side the BNLJ plan guard proves) — never a driver-side
   * `.head()`/`.collect()` inside the constructor, which costs an extra
   * job per declaration and hides an action behind a lazy-looking API.
   *
-  * Mechanics: a listener counts `onJobStart`; after each constructor we
-  * run a 1-partition sentinel action and wait for its event. The
-  * listener bus is FIFO, so once the sentinel's event has been counted,
-  * every job the constructor might have launched has been counted too —
-  * the total must then equal the sentinel count exactly.
+  * The declared exceptions are derived from the code, not listed here:
+  * a construction-time job is accepted iff it carries the
+  * [[Materialize.Key]] local property, i.e. it runs inside a
+  * `Materialize` verb (a checkpoint, a bounded collect, or a scoped
+  * driver loop such as the connected-components fixpoint).
   *
-  * The CC-fixpoint queries (q78/q150/q151/q157) are the declared
-  * exceptions: their connected-components fixpoint is a
-  * driver-coordinated loop (documented in PLANS.md) and launches jobs
-  * at build time by design.
+  * Mechanics: a listener counts untagged `onJobStart`s; after each
+  * constructor we run a 1-partition sentinel action and wait for its
+  * event. The listener bus is FIFO, so once the sentinel's event has
+  * been counted, every job the constructor might have launched has
+  * been counted too — the total must then equal the sentinel count
+  * exactly.
   */
 class NoEagerActionSpec extends SparkSpec {
 
-  test("query construction launches no Spark jobs (CC-fixpoint queries exempted)") {
-    val exempt = Set("q78_dup_clusters", "q150_dedup_materialize",
-      "q151_semantic_dedup", "q157_corpus_build", "q165_training_mix_plan",
-      "q171_shipping_manifest", "q172_cellscaled_semdedup",
-      // the LTR/deployed-recall family collects its workload-bounded
-      // pool/leg frames once (≤|queries|×FuseDepth rows at any scale)
-      // to feed multiple consumers — the serving-seam collect pattern,
-      // documented at RetrievalQueries.q189/q190/q193 (q191 inherits
-      // q189's collect)
-      "q189_ltr_features", "q190_deployed_recall", "q191_reranker_lift",
-      "q193_reranker_fit",
-      // r18: the whole keyword-retrieval family materializes its
-      // postings frame once per query (postingsM localCheckpoint — the
-      // WidePhash rule; the production path serves the materialized
-      // InvertedTextIndex) and collects its workload-bounded
-      // query-doc/term/ranked frames once (the q189 pattern)
-      "q180_keyword_search", "q181_hybrid_rrf", "q182_retrieval_recall",
-      "q183_phrase_search", "q184_snippets", "q185_prf_expansion",
-      "q186_mmr_diversify",
-      // r18: the selection COMPOSERS materialize their doc-level
-      // rule-label frame once per query (labelsM localCheckpoint — the
-      // SelectionModelIndex persistence boundary); standalone
-      // q200/q201 keep the fully-lazy chain (2 references only)
-      "q202_selection_funnel", "q203_model_gated_corpus",
-      "q204_full_corpus_build", "q205_selection_calibration",
-      // q199 composes the q157 funnel (same CC fixpoint) behind the
-      // q198 line gate
-      "q199_line_gated_corpus",
-      // q197 collects its workload-bounded ground-truth/probe frames
-      // once (≤3·|Q| rows; the corpus-sized memberships stay plans)
-      "q197_ann_retrain_recall",
-      // q208 composes the same CC fixpoint over image near-dup edges
-      "q208_image_dup_clusters", "q212_multimodal_dedup_funnel",
-      // q217/q219 compose BOTH CC fixpoints (LSH text + wide-hash
-      // image) through the shared manifestFlags frame
-      "q217_multimodal_manifest", "q219_manifest_gate_drops",
-      // the WidePhash signature relation materializes once at
-      // construction (localCheckpoint — measured 12x scan+codec-UDF
-      // re-derivation without it); q208/q212/q217 are covered above
-      "q207_image_near_dup", "q216_phash_width_recall",
-      // the video frame-hash relation materializes once (r17: the
-      // df-cap filter and both join sides re-ran its UDF ~4x)
-      "q214_video_clip_match", "q215_clip_match_recall",
-      // the PQ family collects its bounded quantizer artifacts once
-      // (cs = k·dims rows, cmeta = k·m, the ADC query table ≤
-      // |queries|·k·m — never corpus-sized; the q197/AnnIvfIndex
-      // discipline, documented at VectorQueries.pq)
-      "q125_kmeans_lloyd_step", "q126_pq_encode", "q127_pq_adc_search",
-      "q130_ivfpq_search", "q148_ivfpq_rerank")
+  /** (name, untagged job count, their descriptions) per constructor,
+    * each built (construction + analysis, no execution) in turn. */
+  private def untaggedConstructionJobs(
+      builds: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[(String, Int, Seq[String])] = {
+    import scala.jdk.CollectionConverters._
     val jobs = new AtomicInteger(0)
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val name = j.stageInfos.map(_.name).mkString("|")
+        val tagged = Option(j.properties)
+          .exists(_.getProperty(Materialize.Key) != null)
         // DataFrameReader.parquet launches bounded metadata jobs (footer
         // schema reads / file listing) whose callsite IS the reader call
         // ("parquet at Tables.scala:N"). Those are declaration cost, not
         // hidden actions — a q61-class violation surfaces as
         // "head at ..."/"collect at ..." instead, and stays counted.
-        if (!name.startsWith("parquet at ")) {
+        if (!tagged && !name.startsWith("parquet at ")) {
           descs.add(name)
           jobs.incrementAndGet(); ()
         }
@@ -108,25 +70,52 @@ class NoEagerActionSpec extends SparkSpec {
       jobs.set(0)
       sentinels = 0
 
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        if (!exempt(name)) {
-          val before = sentinels
-          fn(spark, sf0001).schema // construction + analysis, no execution
-          val seen = syncAfterSentinel()
-          val culprits = {
-            import scala.jdk.CollectionConverters._
-            descs.asScala.filterNot(_.contains("NoEagerActionSpec")).toSeq
-          }
-          assert(seen == before + 1,
-            s"$name launched ${seen - before - 1} Spark job(s) during " +
-              "construction — use crossJoin(broadcast(agg)) for scalars, " +
-              s"never a driver-side action in a query constructor " +
-              s"[jobs: ${culprits.mkString("; ")}]")
-          descs.clear()
-          // rebase so a failure message stays per-query accurate
-          jobs.set(sentinels)
-        }
+      builds.map { case (name, fn) =>
+        val before = sentinels
+        fn(spark, sf0001).schema
+        val seen = syncAfterSentinel()
+        val culprits =
+          descs.asScala.filterNot(_.contains("NoEagerActionSpec")).toSeq
+        descs.clear()
+        // rebase so each count stays per-constructor accurate
+        jobs.set(sentinels)
+        (name, seen - before - 1, culprits)
       }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("query construction launches only Materialize-tagged Spark jobs") {
+    for ((name, n, culprits) <-
+        untaggedConstructionJobs(SparkEntry.queries.toSeq.sortBy(_._1)))
+      assert(n == 0,
+        s"$name launched $n untagged Spark job(s) during construction — " +
+          "use crossJoin(broadcast(agg)) for scalars, and route a " +
+          "deliberate materialization through graft.Materialize " +
+          s"[jobs: ${culprits.mkString("; ")}]")
+  }
+
+  test("an untagged action in a constructor fails the check; a tagged one passes") {
+    val found = untaggedConstructionJobs(Seq(
+      "untagged" -> { (s: SparkSession, d: String) =>
+        val docs = Tables.documents(s, d)
+        docs.count()
+        docs
+      },
+      "tagged" -> { (s: SparkSession, d: String) =>
+        Materialize.once("NoEagerActionSpec.tagged", Tables.documents(s, d))
+      })).map { case (name, n, _) => name -> n }.toMap
+    assert(found("untagged") > 0, s"untagged count() not caught: $found")
+    assert(found("tagged") == 0, s"tagged checkpoint flagged: $found")
+  }
+
+  test("Materialize.local over maxRows + 1 rows throws and names the site") {
+    val df = spark.range(4).toDF("id")
+    assert(Materialize.local("NoEagerActionSpec.fits", df, 4).count() == 4)
+    val e = intercept[IllegalStateException](
+      Materialize.local("NoEagerActionSpec.over", df, 3))
+    assert(e.getMessage.contains("NoEagerActionSpec.over") &&
+      e.getMessage.contains("4 rows"), e.getMessage)
+    // the scope restores the caller's (absent) tag even on the throw path
+    assert(spark.sparkContext.getLocalProperty(Materialize.Key) == null)
   }
 }

@@ -8,27 +8,12 @@ import org.apache.spark.sql.execution.window.WindowExec
   * rank, which runs over the ≤100 survivors of a TakeOrderedAndProject
   * (per-partition heaps), never the raw stream — documented at
   * QueueQueries.scala. Anything new that plans a global window must
-  * either partition it or justify itself here. */
+  * either partition it or justify itself here. Every query is checked,
+  * including those whose construction runs `Materialize` jobs. */
 class WinScanSpec extends SparkSpec {
   test("no query plans an unpartitioned window (q11's bounded rank excepted)") {
     val allowed = Set("q11_priority_dequeue")
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if name != "q78_dup_clusters" &&
-           name != "q150_dedup_materialize" &&
-           name != "q151_semantic_dedup" &&
-           name != "q157_corpus_build" &&
-           name != "q165_training_mix_plan" &&
-           name != "q171_shipping_manifest" &&
-           name != "q172_cellscaled_semdedup" &&
-           name != "q199_line_gated_corpus" &&
-           name != "q208_image_dup_clusters" &&
-           name != "q212_multimodal_dedup_funnel" &&
-           name != "q217_multimodal_manifest" &&
-           name != "q219_manifest_gate_drops" &&
-           name != "q207_image_near_dup" &&
-           name != "q216_phash_width_recall" &&
-           name != "q214_video_clip_match" &&
-           name != "q215_clip_match_recall") { // iterative/materializing; gated elsewhere
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       val globals = PlanGuards.flatten(
         fn(spark, sf0001).queryExecution.executedPlan).collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
